@@ -1,6 +1,6 @@
 package graft.cep.spark
 
-import org.apache.spark.sql.{Dataset, DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.cep._
 
@@ -16,12 +16,9 @@ import graft.cep._
  */
 object BatchEvaluator {
 
-  /** Column order [[rowToEv]] expects; callers shuffling rows must select exactly this. */
+  /** Column order [[rowToEvCoded]] expects, etype as its dispatch code: every CEP shuffle
+    * ships these first and its group columns after them ([[KeyRuns]]). */
   private[spark] val EvCols = Seq("key", "idx", "etype", "ts", "num", "s1", "s2", "prob")
-
-  private[spark] def rowToEv(r: org.apache.spark.sql.Row): Ev =
-    Ev(r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getDouble(4),
-      r.getString(5), r.getString(6), r.getDouble(7))
 
   /** Event-type column as a small int DISPATCH CODE over the pattern set's relevant types
     * (guide §2.3, narrower types): an UnsafeRow string field costs 8 B offset/len plus the
@@ -36,20 +33,29 @@ object BatchEvaluator {
       when(col("etype") === t, lit(i)).otherwise(acc)
     }
 
+  /** [[EvCols]] with the etype string swapped for its dispatch code. */
+  private[spark] def codedCols(types: Array[String]): Seq[org.apache.spark.sql.Column] =
+    EvCols.map(c => if (c == "etype") etypeCode(types).as(c) else col(c))
+
   private[spark] def rowToEvCoded(r: org.apache.spark.sql.Row, types: Array[String]): Ev =
     Ev(r.getString(0), r.getLong(1), types(r.getInt(2)), r.getLong(3), r.getDouble(4),
       r.getString(5), r.getString(6), r.getDouble(7))
+
+  /** The pattern set's relevant event types in first-seen order: the scan filter's list
+    * and the dispatch-code table. */
+  private[spark] def relevantTypes(compiled: IndexedSeq[CompiledPattern]): Array[String] =
+    compiled.flatMap(_.relevantTypes).distinct.toArray
 
   /** Evaluate patterns over a typed event dataset. The relevant-type filter is applied as a
     * Catalyst predicate BEFORE the shuffle so it reaches the parquet scan (pushdown).
     *
     * The shuffle + ordering stay ROW-based end to end: `repartition(key)` hash-co-locates
-    * each conversation without the map-side object materialization `groupByKey(_.key)`
+    * each conversation without the map-side object materialization a typed group-by-key
     * pays (AppendColumns deserializes every Ev — text payload included — just to read one
     * field), and `sortWithinPartitions(key, ts, idx)` hands the work to Tungsten's
     * UnsafeRow sort instead of a per-group `Arrays.sort` over freshly allocated objects.
     * Events materialize exactly once, on the reduce side, streaming straight into the
-    * engine at key boundaries — no per-group array.
+    * engine at key boundaries ([[KeyRuns]]) — no per-group array.
     *
     * `sortedStorage` enables binary-searched relop probes (output-invariant; off = the
     * reference's default full-scan probe, /root/reference/misc/DefaultConfig.py:34). */
@@ -63,13 +69,16 @@ object BatchEvaluator {
                        sortedStorage: Boolean = false): Dataset[CepMatch] = {
     val spark = events.sparkSession
     import spark.implicits._
-    val types = compiled.flatMap(_.relevantTypes).distinct
-    val typeArr = types.toArray
+    val types = relevantTypes(compiled)
+    sortedByKey(events, types).mapPartitions(KeyRuns.byKey(_, compiled, types, sortedStorage))
+  }
+
+  /** The keyed shuffle, rows sorted into key runs for [[KeyRuns.byKey]]. */
+  private[spark] def sortedByKey(events: Dataset[Ev], types: Array[String]): DataFrame =
     events
-      .filter(col("etype").isin(types: _*))
+      .filter(col("etype").isin(types.toSeq: _*))
       .toDF()
-      .select(col("key"), col("idx"), etypeCode(typeArr).as("etype"), col("ts"),
-        col("num"), col("s1"), col("s2"), col("prob"), xxhash64(col("key")).as("khash"))
+      .select(codedCols(types) :+ xxhash64(col("key")).as("khash"): _*)
       .repartition(col("key"))
       // Leading with the key's 64-bit hash makes the sort's 8-byte prefix comparison
       // decisive for (almost) every cross-key pair — the raw conv-id strings share long
@@ -77,52 +86,6 @@ object BatchEvaluator {
       // order to break hash collisions deterministically; grouping only needs key
       // contiguity, not lexicographic key order.
       .sortWithinPartitions("khash", "key", "ts", "idx")
-      .mapPartitions { rows =>
-        new Iterator[CepMatch] {
-          private var curKey: String = null
-          private var engine: MatchEngine = null
-          private val buf = scala.collection.mutable.Queue.empty[CepMatch]
-          private val sink = (m: CepMatch) => { buf += m; () }
-          private def refill(): Unit = {
-            while (buf.isEmpty && rows.hasNext) {
-              val r = rows.next()
-              val k = r.getString(0)
-              if (k != curKey) {
-                if (engine != null) buf ++= engine.finish()
-                curKey = k
-                engine = new MatchEngine(compiled, sortedStorage = sortedStorage)
-              }
-              engine.feedEach(rowToEvCoded(r, typeArr))(sink)
-            }
-            if (buf.isEmpty && engine != null) { buf ++= engine.finish(); engine = null }
-          }
-          def hasNext: Boolean = { refill(); buf.nonEmpty }
-          def next(): CepMatch = { refill(); buf.dequeue() }
-        }
-      }
-  }
-
-  /** The original typed-Dataset formulation (`groupByKey(_.key).flatMapGroups`), kept as
-    * the semantic specification the row-based plan above is tested against. */
-  private[spark] def evaluateTyped(events: Dataset[Ev], patterns: Seq[Pattern],
-                                   sortedStorage: Boolean = false): Dataset[CepMatch] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val types = compiled.flatMap(_.relevantTypes).distinct
-    events
-      .filter(col("etype").isin(types: _*))
-      .groupByKey(_.key)
-      .flatMapGroups { (_, it) =>
-        val evs = it.toArray
-        java.util.Arrays.sort(evs, Ordering.by((e: Ev) => (e.ts, e.idx)))
-        val engine = new MatchEngine(compiled, sortedStorage = sortedStorage)
-        val out = Vector.newBuilder[CepMatch]
-        evs.foreach(e => out ++= engine.feed(e))
-        out ++= engine.finish()
-        out.result().iterator
-      }
-  }
 
   /** Flatten matches to a stable-schema DataFrame: one row per match with a `<name>_idx`
     * column per bound slot (KC slots emit the array `<name>_idxs`). Column order follows

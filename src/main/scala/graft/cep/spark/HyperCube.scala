@@ -130,18 +130,19 @@ object HyperCube {
                units: Int = 0): Dataset[CepMatch] = {
     require(attributes.nonEmpty, "attributes_dict is empty")
     patterns.foreach { p =>
-      val types = primitiveTypes(p.structure)
+      val prims = primitiveTypes(p.structure)
+      val types = prims.map(_._1)
       require(types.distinct.lengthCompare(types.length) == 0,
         s"HyperCube does not support multiple bindings of one event type, got $types")
       // a Kleene subset binds many events of one type with different attribute hashes —
       // they would never co-locate; such types must broadcast
-      val kcTypes = kcPrimitiveTypes(p.structure)
+      val kcTypes = prims.collect { case (t, _, true) => t }
       require(kcTypes.forall(t => !attributes.contains(t)),
         s"Kleene-bound types must stay unmapped (broadcast), got mapped: ${kcTypes.filter(attributes.contains)}")
       // a negative routed by attribute reaches only its own faces, so the owner cell of
       // a match may never see the invalidating negative -> silent false positives;
       // negative types must stay unmapped (broadcast to every cell)
-      val negTypes = negPrimitiveTypes(p.structure)
+      val negTypes = prims.collect { case (t, true, _) => t }
       require(negTypes.forall(t => !attributes.contains(t)),
         s"negated types must stay unmapped (broadcast), got mapped: ${negTypes.filter(attributes.contains)}")
     }
@@ -152,81 +153,36 @@ object HyperCube {
       attributes.toArray.sortBy(_._1).flatMap { case (t, fs) => fs.map(f => (t, f)) }
     val cube = Cube(calcCubicShares(nUnits, dims.length), dims)
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val types = compiled.flatMap(_.relevantTypes).distinct
+    val types = BatchEvaluator.relevantTypes(compiled)
+    // owner rule: a match is kept only by the minimum cell of its members' cell-set
+    // intersection (reference skip_item); cell sets come from the cube's per-task cache,
+    // so the filter costs a few sorted-array probes per match
+    val ownerCell = (m: CepMatch) =>
+      cube.minCommonCell(m.binds.iterator.flatMap(_.evs).map(cube.cells).toArray)
 
     // Cell routing needs the user-supplied attribute extractors (arbitrary closures), so
-    // the replication step stays a typed flatMap; the SHUFFLE and per-cell evaluation are
-    // row-based like BatchEvaluator/Rip — Tungsten-sorted rows streamed through the
-    // engine at unit boundaries, events materialized once on the reduce side.
+    // the replication step stays a typed flatMap; the SHUFFLE and per-cell evaluation
+    // share BatchEvaluator/Rip's row layout and run loop ([[KeyRuns]]).
     events
-      .filter(col("etype").isin(types: _*))
+      .filter(col("etype").isin(types.toSeq: _*))
       .flatMap(e => cube.cells(e).iterator.map(u => (u, e)))
       .toDF()
-      .select((col("_1").as("unit") +: BatchEvaluator.EvCols.map(c => col(s"_2.$c"))): _*)
+      .select(BatchEvaluator.EvCols.map(c => col(s"_2.$c").as(c)) :+ col("_1").as("unit"): _*)
+      .select(BatchEvaluator.codedCols(types) :+ col("unit"): _*)
       .repartition(col("unit"))
       .sortWithinPartitions("unit", "ts", "idx")
-      .mapPartitions { rows =>
-        new Iterator[CepMatch] {
-          private var curUnit = Int.MinValue
-          private var engine: MatchEngine = null
-          private val buf = scala.collection.mutable.Queue.empty[CepMatch]
-          // owner rule: keep only matches whose members' cell-set intersection has this
-          // unit as its minimum (reference skip_item); cell sets come from the cube's
-          // per-task cache, so the filter costs a few sorted-array probes per match
-          private val ownSink = (m: CepMatch) => {
-            val memberCells = m.binds.iterator.flatMap(_.evs).map(cube.cells).toArray
-            if (cube.minCommonCell(memberCells) == curUnit) { buf += m; () }
-          }
-          private def rowToEv(r: org.apache.spark.sql.Row): Ev =
-            Ev(r.getString(1), r.getLong(2), r.getString(3), r.getLong(4), r.getDouble(5),
-              r.getString(6), r.getString(7), r.getDouble(8))
-          private def finishEngine(): Unit = {
-            engine.finish().foreach(ownSink)
-            engine = null
-          }
-          private def refill(): Unit = {
-            while (buf.isEmpty && rows.hasNext) {
-              val r = rows.next()
-              val u = r.getInt(0)
-              if (u != curUnit || engine == null) {
-                if (engine != null) finishEngine()
-                curUnit = u
-                engine = new MatchEngine(compiled)
-              }
-              engine.feedEach(rowToEv(r))(ownSink)
-            }
-            if (buf.isEmpty && engine != null) finishEngine()
-          }
-          def hasNext: Boolean = { refill(); buf.nonEmpty }
-          def next(): CepMatch = { refill(); buf.dequeue() }
-        }
-      }
+      .mapPartitions(KeyRuns.byCell(_, compiled, types, ownerCell))
   }
 
-  private def negPrimitiveTypes(s: PStruct): List[String] = s match {
-    case PNeg(a)          => primitiveTypes(a)
-    case PSeq(as)         => as.flatMap(negPrimitiveTypes)
-    case PAnd(as)         => as.flatMap(negPrimitiveTypes)
-    case POr(as)          => as.flatMap(negPrimitiveTypes)
-    case PKleene(a, _, _) => negPrimitiveTypes(a)
-    case _: Prim          => Nil
-  }
-
-  private def kcPrimitiveTypes(s: PStruct): List[String] = s match {
-    case PKleene(a, _, _) => primitiveTypes(a)
-    case PSeq(as)         => as.flatMap(kcPrimitiveTypes)
-    case PAnd(as)         => as.flatMap(kcPrimitiveTypes)
-    case POr(as)          => as.flatMap(kcPrimitiveTypes)
-    case PNeg(a)          => kcPrimitiveTypes(a)
-    case _: Prim          => Nil
-  }
-
-  private def primitiveTypes(s: PStruct): List[String] = s match {
-    case Prim(et, _)      => List(et)
-    case PSeq(as)         => as.flatMap(primitiveTypes)
-    case PAnd(as)         => as.flatMap(primitiveTypes)
-    case POr(as)          => as.flatMap(primitiveTypes)
-    case PKleene(a, _, _) => primitiveTypes(a)
-    case PNeg(a)          => primitiveTypes(a)
+  /** Event type of each primitive in `s`, with whether it sits under a NOT and under a
+    * Kleene closure. */
+  private def primitiveTypes(s: PStruct, neg: Boolean = false,
+                             kc: Boolean = false): List[(String, Boolean, Boolean)] = s match {
+    case Prim(et, _)      => List((et, neg, kc))
+    case PSeq(as)         => as.flatMap(primitiveTypes(_, neg, kc))
+    case PAnd(as)         => as.flatMap(primitiveTypes(_, neg, kc))
+    case POr(as)          => as.flatMap(primitiveTypes(_, neg, kc))
+    case PKleene(a, _, _) => primitiveTypes(a, neg, kc = true)
+    case PNeg(a)          => primitiveTypes(a, neg = true, kc)
   }
 }

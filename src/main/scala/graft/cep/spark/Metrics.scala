@@ -31,44 +31,23 @@ final class CepMetrics(spark: SparkSession) extends Serializable {
 }
 
 object Instrumented {
-  /** Batch evaluation with per-partition lineage/metrics. Same plan as
-    * BatchEvaluator.evaluate plus mapPartitions-level accounting. */
+  /** Batch evaluation with per-partition lineage/metrics: BatchEvaluator's own keyed
+    * plan, with each task's counts read from its run loop when the task completes. */
   def evaluate(events: Dataset[Ev], patterns: Seq[Pattern], metrics: CepMetrics): Dataset[CepMatch] = {
     val spark = events.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val types = compiled.flatMap(_.relevantTypes).distinct
-    events
-      .filter(col("etype").isin(types: _*))
-      .groupByKey(_.key)
-      .mapGroups { (_, it) =>
-        val evs = it.toArray
-        java.util.Arrays.sort(evs, Ordering.by((e: Ev) => (e.ts, e.idx)))
-        val engine = new MatchEngine(compiled)
-        val out = Vector.newBuilder[CepMatch]
-        evs.foreach(e => out ++= engine.feed(e))
-        out ++= engine.finish()
-        (evs.length.toLong, out.result())
+    val types = BatchEvaluator.relevantTypes(compiled)
+    BatchEvaluator.sortedByKey(events, types).mapPartitions { rows =>
+      val runs = KeyRuns.byKey(rows, compiled, types)
+      val task = TaskContext.get()
+      task.addTaskCompletionListener[Unit] { _ =>
+        val (keys, evs, ms) = runs.counts
+        metrics.eventsIn.add(evs); metrics.matchesOut.add(ms)
+        metrics.partitionLineage.add((task.partitionId(), keys, evs, ms))
       }
-      .mapPartitions { groups =>
-        val pid = TaskContext.getPartitionId()
-        var keys = 0L; var evs = 0L; var ms = 0L
-        val result = groups.flatMap { case (nEvs, matches) =>
-          keys += 1; evs += nEvs; ms += matches.size
-          metrics.eventsIn.add(nEvs); metrics.matchesOut.add(matches.size)
-          matches
-        }
-        new Iterator[CepMatch] {
-          private var reported = false
-          def hasNext: Boolean = {
-            val h = result.hasNext
-            if (!h && !reported) { reported = true; metrics.partitionLineage.add((pid, keys, evs, ms)) }
-            h
-          }
-          def next(): CepMatch = result.next()
-        }
-      }
+      runs
+    }
   }
 }
 

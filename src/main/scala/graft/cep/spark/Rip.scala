@@ -76,17 +76,15 @@ object Rip {
     val spark = events.sparkSession
     import spark.implicits._
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val types = compiled.flatMap(_.relevantTypes).distinct
-    val policyFree = patterns.forall(p =>
-      p.policy.single.isEmpty && p.policy.freeze.isEmpty && p.policy.next.isEmpty)
-    val filtered = events.filter(col("etype").isin(types: _*))
+    val types = BatchEvaluator.relevantTypes(compiled)
+    val filtered = events.filter(col("etype").isin(types.toSeq: _*))
     val frac = 100.0 / hotThreshold
     // Detection counts RAW per-key events (no relevant-type filter): raw >= filtered
     // counts always, so this can only OVER-flag (a key a bit under threshold on relevant
     // types gets mild pane replication) — never miss a hot key. Skipping the type filter
     // keeps the detection scan to the single key column (no role/tool reads, no CASE).
     val hot: Array[String] =
-      if (!policyFree) Array.empty
+      if (!policyFree(patterns)) Array.empty
       else if (frac >= 1.0)
         events.select("key").groupBy("key").count()
           .filter(col("count") > hotThreshold).select("key").as[String].collect()
@@ -103,17 +101,27 @@ object Rip {
     // instead: same output (routing is never a correctness decision), no per-row key
     // test, no giant literal plan. (Round-4 driver artifact: a 1478-key hot list at test
     // threshold cost cep_auto_seq3 2.9x salted's wall; this guard caps the list.)
-    if (hot.isEmpty) BatchEvaluator.evaluate(filtered, patterns)
-    else if (hot.length > 256) evaluatePaned(filtered, patterns, paneMicros, hotKeys = None)
-    else evaluatePaned(filtered, patterns, paneMicros, hotKeys = Some(hot))
+    if (hot.isEmpty) BatchEvaluator.evaluateCompiled(filtered, compiled)
+    else if (hot.length > 256) evaluatePaned(filtered, patterns, compiled, paneMicros, hotKeys = None)
+    else evaluatePaned(filtered, patterns, compiled, paneMicros, hotKeys = Some(hot))
   }
 
   /** Unconditional pane salting: every key fans out over time panes. */
   def evaluateSalted(events: Dataset[Ev], patterns: Seq[Pattern], paneMicros: Long): Dataset[CepMatch] = {
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val types = compiled.flatMap(_.relevantTypes).distinct
-    evaluatePaned(events.filter(col("etype").isin(types: _*)), patterns, paneMicros, hotKeys = None)
+    val types = BatchEvaluator.relevantTypes(compiled)
+    val filtered = events.filter(col("etype").isin(types.toSeq: _*))
+    evaluatePaned(filtered, patterns, compiled, paneMicros, hotKeys = None)
   }
+
+  /** Event types bound under some NOT across the patterns — the only events a pane ever
+    * needs from its FOLLOWING pane (a match's positives all lie at/after its firstTs;
+    * only an invalidating negative may precede it). */
+  private[spark] def negativeTypes(compiled: IndexedSeq[CompiledPattern]): Set[String] =
+    compiled.flatMap { cp =>
+      val negSlots = cp.nodes.collect { case n: NegSpec => n.neg.slots }.flatten.toSet
+      cp.nodes.collect { case l: LeafSpec if negSlots(l.slot) => l.etype }
+    }.toSet
 
   /** The replication pane-id ARRAY for each event row, computed entirely in Catalyst
     * (codegen'd — no map-side object materialization). Windowed replication: a
@@ -132,15 +140,6 @@ object Rip {
     *
     * Shared by the batch path below and [[StreamEvaluator.evaluateSalted]] — the
     * streaming salted path replicates with exactly the same Catalyst expression. */
-  /** Event types bound under some NOT across the patterns — the only events a pane ever
-    * needs from its FOLLOWING pane (a match's positives all lie at/after its firstTs;
-    * only an invalidating negative may precede it). */
-  private[spark] def negativeTypes(compiled: IndexedSeq[CompiledPattern]): Set[String] =
-    compiled.flatMap { cp =>
-      val negSlots = cp.nodes.collect { case n: NegSpec => n.neg.slots }.flatten.toSet
-      cp.nodes.collect { case l: LeafSpec if negSlots(l.slot) => l.etype }
-    }.toSet
-
   private[spark] def paneArray(compiled: IndexedSeq[CompiledPattern], window: Long,
                                paneMicros: Long, hotKeys: Option[Array[String]]): Column = {
     val backPane = compiled.exists(negCanPrecedeFirstPositive)
@@ -162,12 +161,15 @@ object Rip {
     }
   }
 
+  /** MATCH_ANY everywhere: no single/freeze/next policy, the only patterns panes may split. */
+  private def policyFree(patterns: Seq[Pattern]): Boolean =
+    patterns.forall(p => p.policy.single.isEmpty && p.policy.freeze.isEmpty && p.policy.next.isEmpty)
+
   /** Guard shared by the batch and streaming salted paths. */
   private[spark] def requireSaltable(patterns: Seq[Pattern], paneMicros: Long): Unit = {
     val window = patterns.map(_.windowMicros).max
     require(paneMicros >= window, s"pane width $paneMicros must be >= max pattern window $window")
-    require(patterns.forall(p =>
-      p.policy.single.isEmpty && p.policy.freeze.isEmpty && p.policy.next.isEmpty),
+    require(policyFree(patterns),
       "salted evaluation requires MATCH_ANY (single/freeze/next policies carry cross-pane state)")
   }
 
@@ -175,14 +177,14 @@ object Rip {
     * (evaluateSalted); `Some(keys)` salts only those keys and routes the rest through a
     * sentinel pane in the SAME shuffle — the cold side then has exactly the plain path's
     * per-key grouping (one group per key, no replication, no owner filtering). */
-  private def evaluatePaned(filtered: Dataset[Ev], patterns: Seq[Pattern], paneMicros: Long,
+  private def evaluatePaned(filtered: Dataset[Ev], patterns: Seq[Pattern],
+                            compiled: IndexedSeq[CompiledPattern], paneMicros: Long,
                             hotKeys: Option[Array[String]]): Dataset[CepMatch] = {
     val spark = filtered.sparkSession
     import spark.implicits._
     requireSaltable(patterns, paneMicros)
     val window = patterns.map(_.windowMicros).max
-    val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
-    val typeArr = compiled.flatMap(_.relevantTypes).distinct.toArray
+    val types = BatchEvaluator.relevantTypes(compiled)
     val panes: Column = paneArray(compiled, window, paneMicros, hotKeys)
     filtered
       .toDF()
@@ -191,47 +193,13 @@ object Rip {
       // pane expressions read the etype STRING (negative-type replication); swap it for
       // the int dispatch code only now, in the projection feeding the exchange
       // (see BatchEvaluator.etypeCode — narrower shuffle/sort rows, canonical decode)
-      .select(col("key"), col("idx"), BatchEvaluator.etypeCode(typeArr).as("etype"),
-        col("ts"), col("num"), col("s1"), col("s2"), col("prob"), col("pane"),
-        xxhash64(col("key"), col("pane")).as("khash"))
+      .select(BatchEvaluator.codedCols(types) ++
+        Seq(col("pane"), xxhash64(col("key"), col("pane")).as("khash")): _*)
       .repartition(col("key"), col("pane"))
-      // hash-led sort: see BatchEvaluator.evaluate — prefix-decisive cross-group compares
+      // hash-led sort: see BatchEvaluator.sortedByKey — prefix-decisive cross-group compares
       .sortWithinPartitions("khash", "key", "pane", "ts", "idx")
-      .mapPartitions { rows =>
-        // Streaming walk over (key, pane) runs — same shape as BatchEvaluator.evaluate's
-        // reduce side, plus the owner filter: a match is kept only by the pane containing
-        // its firstTs, so each match is emitted exactly once despite replication. The
-        // sentinel pane owns everything (cold keys have exactly one, unreplicated group).
-        new Iterator[CepMatch] {
-          private var curKey: String = null
-          private var curPane: Long = 0L
-          private var lo = 0L
-          private var hi = 0L
-          private var engine: MatchEngine = null
-          private val buf = scala.collection.mutable.Queue.empty[CepMatch]
-          private val ownSink = (m: CepMatch) =>
-            if (m.firstTs >= lo && m.firstTs < hi) { buf += m; () }
-          private def owned(ms: Iterable[CepMatch]): Unit =
-            ms.foreach(m => if (m.firstTs >= lo && m.firstTs < hi) buf += m)
-          private def refill(): Unit = {
-            while (buf.isEmpty && rows.hasNext) {
-              val r = rows.next()
-              val k = r.getString(0)
-              val pn = r.getLong(8)
-              if (k != curKey || pn != curPane || engine == null) {
-                if (engine != null) owned(engine.finish())
-                curKey = k; curPane = pn
-                if (pn == ColdPane) { lo = Long.MinValue; hi = Long.MaxValue }
-                else { lo = pn * paneMicros; hi = lo + paneMicros }
-                engine = new MatchEngine(compiled)
-              }
-              engine.feedEach(BatchEvaluator.rowToEvCoded(r, typeArr))(ownSink)
-            }
-            if (buf.isEmpty && engine != null) { owned(engine.finish()); engine = null }
-          }
-          def hasNext: Boolean = { refill(); buf.nonEmpty }
-          def next(): CepMatch = { refill(); buf.dequeue() }
-        }
-      }
+      // owner filter: a match is kept only by the pane containing its firstTs, so each
+      // match is emitted exactly once despite replication
+      .mapPartitions(KeyRuns.byPane(_, compiled, types, paneMicros))
   }
 }

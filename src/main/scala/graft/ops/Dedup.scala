@@ -288,7 +288,8 @@ object Dedup {
           if (sc.getCheckpointDir.isDefined) next.checkpoint()
           else next.localCheckpoint(eager = false)
         } else next.cache()
-      changed = step.agg(sum("chg")).first().getLong(0) // the round's convergence read
+      // the round's convergence read; the sum is null when there are no edges
+      changed = step.agg(coalesce(sum("chg"), lit(0L))).first().getLong(0)
       cached.unpersist()
       cached = step
       labels = step.select("id", "label")

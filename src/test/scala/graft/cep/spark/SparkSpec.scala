@@ -1,6 +1,7 @@
 package graft.cep.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cep._
 import graft.cep.PStruct._
@@ -46,6 +47,26 @@ class SparkSpec extends AnyFunSuite {
   private lazy val turns = Transcripts.generate(nConvs = 30)
   private lazy val evs = Transcripts.toEv(Transcripts.toDs(spark, turns))
 
+  /** The typed-Dataset formulation (`groupByKey(_.key).flatMapGroups`), kept as the
+    * semantic specification the row-based plan is tested against. */
+  private def evaluateTyped(events: Dataset[Ev], patterns: Seq[Pattern]): Dataset[CepMatch] = {
+    import spark.implicits._
+    val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
+    val types = compiled.flatMap(_.relevantTypes).distinct
+    events
+      .filter(col("etype").isin(types: _*))
+      .groupByKey(_.key)
+      .flatMapGroups { (_, it) =>
+        val evs = it.toArray
+        java.util.Arrays.sort(evs, Ordering.by((e: Ev) => (e.ts, e.idx)))
+        val engine = new MatchEngine(compiled)
+        val out = Vector.newBuilder[CepMatch]
+        evs.foreach(e => out ++= engine.feed(e))
+        out ++= engine.finish()
+        out.result().iterator
+      }
+  }
+
   test("BatchEvaluator equals the in-process engine on generated transcripts") {
     val patterns = Seq(flagship.copy(id = 0), negPattern.copy(id = 1), kcPattern.copy(id = 2))
     val got = canon(BatchEvaluator.evaluate(evs, patterns).collect().toSeq)
@@ -61,7 +82,7 @@ class SparkSpec extends AnyFunSuite {
   test("row-based evaluate equals the typed groupByKey formulation") {
     val patterns = Seq(flagship.copy(id = 0), negPattern.copy(id = 1), kcPattern.copy(id = 2))
     val rowBased = canon(BatchEvaluator.evaluate(evs, patterns).collect().toSeq)
-    val typed = canon(BatchEvaluator.evaluateTyped(evs, patterns).collect().toSeq)
+    val typed = canon(evaluateTyped(evs, patterns).collect().toSeq)
     assert(rowBased.nonEmpty && rowBased == typed)
   }
 
@@ -157,6 +178,29 @@ class SparkSpec extends AnyFunSuite {
     val a2 = canon(Rip.evaluateAuto(evs, withPolicy, paneMicros = 10 * MIN,
       hotThreshold = 1L).collect().toSeq)
     assert(a2 == p2)
+  }
+
+  test("0-row and 1-row inputs give an empty result through every batch entry point") {
+    import spark.implicits._
+    val patterns = Seq(flagship.copy(id = 0), negPattern.copy(id = 1), kcPattern.copy(id = 2))
+    val inputs = Seq(Seq.empty[Ev], Seq(Ev("k", 0, "USER", 3 * MIN, 1.0, "hi", null)))
+    inputs.foreach { rows =>
+      val ds = spark.createDataset(rows)
+      val metrics = new CepMetrics(spark)
+      val results = Seq(
+        "BatchEvaluator.evaluate" -> BatchEvaluator.evaluate(ds, patterns),
+        "Rip.evaluateSalted" -> Rip.evaluateSalted(ds, patterns, 10 * MIN),
+        // threshold 0 flags every key hot (paned route); Long.MaxValue none (keyed route)
+        "Rip.evaluateAuto hot" -> Rip.evaluateAuto(ds, patterns, 10 * MIN, hotThreshold = 0L),
+        "Rip.evaluateAuto cold" -> Rip.evaluateAuto(ds, patterns, 10 * MIN, hotThreshold = Long.MaxValue),
+        "HyperCube.evaluate" -> HyperCube.evaluate(ds, patterns,
+          attributes = Map("USER" -> Seq((e: Ev) => e.num.toLong)), units = 4),
+        "Instrumented.evaluate" -> Instrumented.evaluate(ds, patterns, metrics))
+      results.foreach { case (entry, ms) =>
+        assert(ms.collect().isEmpty, s"$entry on ${rows.size} rows")
+      }
+      assert(metrics.eventsIn.value == rows.size && metrics.matchesOut.value == 0L)
+    }
   }
 
   test("salted evaluation rejects MATCH_NEXT patterns (cross-pane consumption state)") {

@@ -137,6 +137,12 @@ class OpsSpec extends AnyFunSuite {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("dedup: duplicate clusters of an empty pair set are empty") {
+    import spark.implicits._
+    val pairs = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    assert(Dedup.duplicateClusters(pairs).collect().isEmpty)
+  }
+
   test("dedup: minhash LSH pairs are exactly the >=0.4-Jaccard pairs it verifies") {
     val viaLsh = Dedup.minhashLshPairs(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
