@@ -15,9 +15,9 @@ import scala.collection.mutable.ArrayBuffer
  * or each watermark-complete prefix (streaming).
  *
  * Deliberately pure Scala with no Spark dependency: the same engine instance backs the
- * batch evaluators (one engine per sorted key run, `graft.cep.spark.KeyRuns` under
- * mapPartitions), the streaming evaluator (flatMapGroupsWithState, via
- * snapshot/restore), and unit tests.
+ * batch evaluators (one engine per sorted key run, `graft.cep.spark.KeyRuns` driven by
+ * the `CepEvaluate` Catalyst operator), the streaming evaluator (flatMapGroupsWithState,
+ * via snapshot/restore), and unit tests.
  */
 final class MatchEngine(patterns: IndexedSeq[CompiledPattern], shedCap: Int = 0,
                         sortedStorage: Boolean = false) extends Serializable {

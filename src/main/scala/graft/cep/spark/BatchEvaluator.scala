@@ -2,6 +2,7 @@ package graft.cep.spark
 
 import org.apache.spark.sql.{Dataset, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.CepEvaluate
 import graft.cep._
 
 /**
@@ -11,35 +12,31 @@ import graft.cep._
  * (/root/reference/parallel/data_parallel/GroupByKeyParallelExecutionAlgorithm.py:10-48).
  *
  * Plan shape: parquet scan -> Catalyst type/leaf-predicate filter (pushed to the scan) ->
- * shuffle on `key` (the ONLY shuffle) -> per-key sorted NFA advance -> matches. Scales by
- * key cardinality; hot keys go through [[Rip.evaluateSalted]] instead.
+ * shuffle on `key` (the ONLY shuffle) -> sort -> CepEvaluate (per-key NFA advance) ->
+ * matches. Scales by key cardinality; hot keys go through [[Rip.evaluateSalted]] instead.
  */
 object BatchEvaluator {
 
-  /** Column order [[rowToEvCoded]] expects, etype as its dispatch code: every CEP shuffle
-    * ships these first and its group columns after them ([[KeyRuns]]). */
+  /** Column order [[KeyRuns]] reads, etype as its dispatch code: every CEP shuffle ships
+    * these first and its group columns after them. */
   private[spark] val EvCols = Seq("key", "idx", "etype", "ts", "num", "s1", "s2", "prob")
 
   /** Event-type column as a small int DISPATCH CODE over the pattern set's relevant types
     * (guide §2.3, narrower types): an UnsafeRow string field costs 8 B offset/len plus the
     * padded bytes (16-24 B for typical type names) on every shuffled + sorted row, where
     * the int code costs its fixed 8 B slot. Decoding maps the code back to ONE canonical
-    * String instance per type ([[rowToEvCoded]]), so the engine's per-event dispatch
-    * lookup hits identity-equal keys with cached hashCodes instead of allocating a fresh
-    * String per row. The relevant-type filter runs before this projection, so every row
-    * matches exactly one code. */
+    * String instance per type ([[KeyRuns]]), so the engine's per-event dispatch lookup
+    * hits identity-equal keys with cached hashCodes instead of allocating a fresh String
+    * per row. The code is the type's position in one literal array (-1 when absent), so
+    * the projection stays one expression however many types the patterns name. The
+    * relevant-type filter runs before this projection, so every row matches exactly one
+    * code. */
   private[spark] def etypeCode(types: Array[String]): org.apache.spark.sql.Column =
-    types.zipWithIndex.foldLeft(lit(-1)) { case (acc, (t, i)) =>
-      when(col("etype") === t, lit(i)).otherwise(acc)
-    }
+    (array_position(typedLit(types.toSeq), col("etype")) - 1).cast("int")
 
   /** [[EvCols]] with the etype string swapped for its dispatch code. */
   private[spark] def codedCols(types: Array[String]): Seq[org.apache.spark.sql.Column] =
     EvCols.map(c => if (c == "etype") etypeCode(types).as(c) else col(c))
-
-  private[spark] def rowToEvCoded(r: org.apache.spark.sql.Row, types: Array[String]): Ev =
-    Ev(r.getString(0), r.getLong(1), types(r.getInt(2)), r.getLong(3), r.getDouble(4),
-      r.getString(5), r.getString(6), r.getDouble(7))
 
   /** The pattern set's relevant event types in first-seen order: the scan filter's list
     * and the dispatch-code table. */
@@ -49,13 +46,14 @@ object BatchEvaluator {
   /** Evaluate patterns over a typed event dataset. The relevant-type filter is applied as a
     * Catalyst predicate BEFORE the shuffle so it reaches the parquet scan (pushdown).
     *
-    * The shuffle + ordering stay ROW-based end to end: `repartition(key)` hash-co-locates
-    * each conversation without the map-side object materialization a typed group-by-key
-    * pays (AppendColumns deserializes every Ev — text payload included — just to read one
-    * field), and `sortWithinPartitions(key, ts, idx)` hands the work to Tungsten's
-    * UnsafeRow sort instead of a per-group `Arrays.sort` over freshly allocated objects.
-    * Events materialize exactly once, on the reduce side, streaming straight into the
-    * engine at key boundaries ([[KeyRuns]]) — no per-group array.
+    * Plan: scan -> filter -> dispatch-code projection -> `repartition(key)` ->
+    * `sortWithinPartitions(khash, key, ts, idx)` -> [[org.apache.spark.sql.graftfn.CepEvaluate]].
+    * The shuffle and sort stay Catalyst operators: `repartition(key)` hash-co-locates each
+    * conversation without the map-side object materialization a typed group-by-key pays,
+    * and the sort is Tungsten's UnsafeRow sort instead of a per-group `Arrays.sort`. The
+    * CepEvaluate operator reads the sorted `InternalRow`s directly — each event becomes an
+    * `Ev` once, streaming into the engine at key boundaries ([[KeyRuns]]) — and writes
+    * each match straight into an `UnsafeRow`.
     *
     * `sortedStorage` enables binary-searched relop probes (output-invariant; off = the
     * reference's default full-scan probe, /root/reference/misc/DefaultConfig.py:34). */
@@ -67,10 +65,8 @@ object BatchEvaluator {
     * strategies (e.g. [[graft.cep.MultiPlan.localSearch]]'s merged plans). */
   def evaluateCompiled(events: Dataset[Ev], compiled: IndexedSeq[CompiledPattern],
                        sortedStorage: Boolean = false): Dataset[CepMatch] = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val types = relevantTypes(compiled)
-    sortedByKey(events, types).mapPartitions(KeyRuns.byKey(_, compiled, types, sortedStorage))
+    CepEvaluate.matches(sortedByKey(events, types), compiled, types, KeyRuns.ByKey(sortedStorage))
   }
 
   /** The keyed shuffle, rows sorted into key runs for [[KeyRuns.byKey]]. */

@@ -2,6 +2,7 @@ package graft.cep.spark
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.CepEvaluate
 import graft.cep._
 
 /**
@@ -146,9 +147,7 @@ object HyperCube {
       require(negTypes.forall(t => !attributes.contains(t)),
         s"negated types must stay unmapped (broadcast), got mapped: ${negTypes.filter(attributes.contains)}")
     }
-    val spark = events.sparkSession
-    import spark.implicits._
-    val nUnits = if (units > 0) units else spark.sparkContext.defaultParallelism
+    val nUnits = if (units > 0) units else events.sparkSession.sparkContext.defaultParallelism
     val dims: Array[(String, Ev => Long)] =
       attributes.toArray.sortBy(_._1).flatMap { case (t, fs) => fs.map(f => (t, f)) }
     val cube = Cube(calcCubicShares(nUnits, dims.length), dims)
@@ -159,19 +158,20 @@ object HyperCube {
     // so the filter costs a few sorted-array probes per match
     val ownerCell = (m: CepMatch) =>
       cube.minCommonCell(m.binds.iterator.flatMap(_.evs).map(cube.cells).toArray)
-
     // Cell routing needs the user-supplied attribute extractors (arbitrary closures), so
-    // the replication step stays a typed flatMap; the SHUFFLE and per-cell evaluation
-    // share BatchEvaluator/Rip's row layout and run loop ([[KeyRuns]]).
-    events
+    // it is a UDF over the event columns, exploded into one row per cell; the SHUFFLE and
+    // per-cell evaluation share BatchEvaluator/Rip's row layout and operator.
+    val cellsOf = udf((key: String, idx: Long, etype: String, ts: Long, num: Double,
+                       s1: String, s2: String, prob: Double) =>
+      cube.cells(Ev(key, idx, etype, ts, num, s1, s2, prob)))
+    val sorted = events
       .filter(col("etype").isin(types.toSeq: _*))
-      .flatMap(e => cube.cells(e).iterator.map(u => (u, e)))
       .toDF()
-      .select(BatchEvaluator.EvCols.map(c => col(s"_2.$c").as(c)) :+ col("_1").as("unit"): _*)
-      .select(BatchEvaluator.codedCols(types) :+ col("unit"): _*)
+      .select(BatchEvaluator.codedCols(types) :+
+        explode(cellsOf(BatchEvaluator.EvCols.map(col): _*)).as("unit"): _*)
       .repartition(col("unit"))
       .sortWithinPartitions("unit", "ts", "idx")
-      .mapPartitions(KeyRuns.byCell(_, compiled, types, ownerCell))
+    CepEvaluate.matches(sorted, compiled, types, KeyRuns.ByCell(ownerCell))
   }
 
   /** Event type of each primitive in `s`, with whether it sits under a NOT and under a

@@ -2,8 +2,8 @@ package graft.cep.spark
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.graftfn.CepEvaluate
 import org.apache.spark.util.{CollectionAccumulator, LongAccumulator}
-import org.apache.spark.TaskContext
 import graft.cep._
 import scala.collection.mutable
 
@@ -32,22 +32,17 @@ final class CepMetrics(spark: SparkSession) extends Serializable {
 
 object Instrumented {
   /** Batch evaluation with per-partition lineage/metrics: BatchEvaluator's own keyed
-    * plan, with each task's counts read from its run loop when the task completes. */
+    * plan, with each task's counts handed over by its CepEvaluate operator when the task
+    * completes. */
   def evaluate(events: Dataset[Ev], patterns: Seq[Pattern], metrics: CepMetrics): Dataset[CepMatch] = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
     val types = BatchEvaluator.relevantTypes(compiled)
-    BatchEvaluator.sortedByKey(events, types).mapPartitions { rows =>
-      val runs = KeyRuns.byKey(rows, compiled, types)
-      val task = TaskContext.get()
-      task.addTaskCompletionListener[Unit] { _ =>
-        val (keys, evs, ms) = runs.counts
-        metrics.eventsIn.add(evs); metrics.matchesOut.add(ms)
-        metrics.partitionLineage.add((task.partitionId(), keys, evs, ms))
-      }
-      runs
+    val onTask = (partition: Int, keys: Long, evs: Long, ms: Long) => {
+      metrics.eventsIn.add(evs); metrics.matchesOut.add(ms)
+      metrics.partitionLineage.add((partition, keys, evs, ms))
     }
+    CepEvaluate.matches(BatchEvaluator.sortedByKey(events, types), compiled, types,
+      KeyRuns.ByKey(sortedStorage = false), Some(onTask))
   }
 }
 

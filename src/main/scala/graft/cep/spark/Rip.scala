@@ -2,6 +2,7 @@ package graft.cep.spark
 
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.CepEvaluate
 import graft.cep._
 
 /**
@@ -17,8 +18,8 @@ import graft.cep._
  * is kept only by its owner pane (the pane containing firstTs), mirroring the reference's
  * owner-dedup rule (RIPParallelExecutionAlgorithm.py:45-52), so each match is emitted
  * exactly once; a hot key fans out over ceil(timespan/pane) tasks. The shuffle and
- * per-pane evaluation are ROW-based like BatchEvaluator (hash-led Tungsten sort,
- * streaming group walk, events materialized once).
+ * per-pane evaluation are the same Catalyst operators as BatchEvaluator's (hash-led
+ * Tungsten sort, then CepEvaluate's streaming group walk over the sorted InternalRows).
  *
  * Negation coverage: a match's positives all lie in [firstTs, firstTs + W), but an
  * INVALIDATING NEGATIVE may lie up to `window` BEFORE firstTs when the pattern has a
@@ -180,13 +181,11 @@ object Rip {
   private def evaluatePaned(filtered: Dataset[Ev], patterns: Seq[Pattern],
                             compiled: IndexedSeq[CompiledPattern], paneMicros: Long,
                             hotKeys: Option[Array[String]]): Dataset[CepMatch] = {
-    val spark = filtered.sparkSession
-    import spark.implicits._
     requireSaltable(patterns, paneMicros)
     val window = patterns.map(_.windowMicros).max
     val types = BatchEvaluator.relevantTypes(compiled)
     val panes: Column = paneArray(compiled, window, paneMicros, hotKeys)
-    filtered
+    val sorted = filtered
       .toDF()
       .select(BatchEvaluator.EvCols.map(col): _*)
       .withColumn("pane", explode(panes))
@@ -198,8 +197,8 @@ object Rip {
       .repartition(col("key"), col("pane"))
       // hash-led sort: see BatchEvaluator.sortedByKey — prefix-decisive cross-group compares
       .sortWithinPartitions("khash", "key", "pane", "ts", "idx")
-      // owner filter: a match is kept only by the pane containing its firstTs, so each
-      // match is emitted exactly once despite replication
-      .mapPartitions(KeyRuns.byPane(_, compiled, types, paneMicros))
+    // owner filter: a match is kept only by the pane containing its firstTs, so each
+    // match is emitted exactly once despite replication
+    CepEvaluate.matches(sorted, compiled, types, KeyRuns.ByPane(paneMicros))
   }
 }

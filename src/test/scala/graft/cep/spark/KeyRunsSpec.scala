@@ -1,11 +1,13 @@
 package graft.cep.spark
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cep._
 import graft.cep.PStruct._
 
-/** The shared run loop over hand-built sorted rows: no Spark session. */
+/** The shared run loop over hand-built sorted InternalRows: no Spark session. */
 class KeyRunsSpec extends AnyFunSuite {
 
   private val types = Array("A", "B", "C")
@@ -17,8 +19,9 @@ class KeyRunsSpec extends AnyFunSuite {
     Pattern(SEQ(P("A", "a"), P("B", "b"), NOT(P("C", "c"))), CTrue, windowMicros = 100)).toIndexedSeq
 
   /** A row in the shuffle layout: EvCols with the etype code, then the group column. */
-  private def row(key: String, idx: Long, etype: String, ts: Long, group: Any): Row =
-    Row(key, idx, types.indexOf(etype), ts, 0.0, null, null, -1.0, group)
+  private def row(key: String, idx: Long, etype: String, ts: Long, group: Any): InternalRow =
+    new GenericInternalRow(Array[Any](UTF8String.fromString(key), idx, types.indexOf(etype), ts,
+      0.0, null, null, -1.0, group))
 
   private def idxs(ms: Seq[CepMatch]): Set[List[Long]] =
     ms.map(_.binds.sortBy(_.slot).flatMap(_.evs.map(_.idx)).toList).toSet
