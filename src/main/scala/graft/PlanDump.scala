@@ -1,11 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
-/** Dev utility: dump `.explain("formatted")` for catalog queries to files.
+/** Dev utility: dump the plans of catalog queries to files.
   * args: sfDir outDir suffix [query...] (no queries = all). One file per query:
-  * `<outDir>/<query>_<suffix>.txt`. Same session shape as Bench (local[cpus],
-  * shuffle.partitions=cpus) so the plans match what the bench executes. */
+  * `<outDir>/<query>_<suffix>.txt`, holding [[render]]'s two plans. Same session shape as
+  * Bench (local[cpus], shuffle.partitions=cpus) so the plans match what the bench
+  * executes. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -24,13 +27,28 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = render(df)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
       spark.catalog.clearCache()
       println(s"[plandump] $name -> $outDir/${name}_$suffix.txt (${plan.length} chars)")
     }
     spark.stop()
+  }
+
+  /** `explain("formatted")` of `df` — the unexecuted plan: operators, pushed filters,
+    * expressions, but no code-generation stages — followed by the final executed plan of
+    * `df` itself, run with its rows discarded on the executors: its `*(n)` markers show
+    * which operators each WholeStageCodegen stage compiled (an operator without one runs
+    * interpreted). */
+  def render(df: DataFrame): String = {
+    val qe = df.queryExecution
+    val formatted = qe.explainString(FormattedMode)
+    qe.toRdd.foreach(_ => ())
+    val fin = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case plan => plan
+    }
+    s"$formatted\n== Final executed plan ==\n${fin.treeString}"
   }
 }

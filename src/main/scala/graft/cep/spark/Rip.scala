@@ -14,10 +14,12 @@ import graft.cep._
  * `paneMicros >= window`; a pane-(p-1)-owned match has firstTs < p*paneWidth and spans at
  * most `window`, so only events in the FIRST `window` micros of pane p replicate to the
  * previous pane — replication factor 1 + window/pane (1.17 at the bench's pane = 6x
- * window), computed entirely in Catalyst (explode of a conditional pane array). A match
- * is kept only by its owner pane (the pane containing firstTs), mirroring the reference's
- * owner-dedup rule (RIPParallelExecutionAlgorithm.py:45-52), so each match is emitted
- * exactly once; a hot key fans out over ceil(timespan/pane) tasks. The shuffle and
+ * window), computed entirely in Catalyst: the explode of a conditional pane array
+ * ([[paneArray]]) compiles, with the scan, filter and projections around it, into the
+ * map stage's one WholeStageCodegen. A match is kept only by its owner pane (the pane
+ * containing firstTs), mirroring the reference's owner-dedup rule
+ * (RIPParallelExecutionAlgorithm.py:45-52), so each match is emitted exactly once; a hot
+ * key fans out over ceil(timespan/pane) tasks. The shuffle and
  * per-pane evaluation are the same Catalyst operators as BatchEvaluator's (hash-led
  * Tungsten sort, then CepEvaluate's streaming group walk over the sorted InternalRows).
  *
@@ -63,36 +65,25 @@ object Rip {
     * out over panes instead of failing). Patterns with consumption policies (which salting
     * cannot honor) route everything through the plain path.
     *
-    * Detection cost: hot-key detection is a ROUTING choice, never a correctness decision
-    * (both paths produce identical matches for any key), so it runs on a sample sized to
-    * expect ~100 rows from a just-hot key (fraction = 100/hotThreshold) instead of a
-    * second full scan of the input — at production thresholds (millions of events) the
-    * detection pass reads ~0.005% of rows. A 2x safety factor flags keys from half the
-    * threshold up: over-flagging costs one key a little pane replication; under-flagging
-    * a >=threshold key needs its Binomial(n>=threshold, f) sample count to land below
-    * half its mean — vanishingly unlikely at 100 expected samples. Tiny thresholds
-    * (< ~100, test scale) degrade to the exact full count. */
+    * Detection cost: hot-key detection ([[hotKeys]]) is a ROUTING choice, never a
+    * correctness decision (both paths produce identical matches for any key), so it
+    * counts a sample sized to expect ~100 rows from a just-hot key (fraction =
+    * 100/hotThreshold) instead of every row. The scan still reads the whole key column
+    * (and only that column); the sample keeps 100/hotThreshold of its rows, and those are
+    * the only rows counted. The job is one map-only stage — no shuffle — and the driver
+    * receives the sampled keys themselves and counts them, ~100·N/hotThreshold keys for
+    * N input rows. A 2x safety factor flags keys from half the threshold up: over-flagging
+    * costs one key a little pane replication; under-flagging a >=threshold key needs its
+    * Binomial(n>=threshold, f) sample count to land below half its mean — vanishingly
+    * unlikely at 100 expected samples. Tiny thresholds (<= 100, test scale) degrade to
+    * the exact full count with the same job, unsampled; the driver then receives all N
+    * keys. */
   def evaluateAuto(events: Dataset[Ev], patterns: Seq[Pattern], paneMicros: Long,
                    hotThreshold: Long = 2000000L): Dataset[CepMatch] = {
-    val spark = events.sparkSession
-    import spark.implicits._
     val compiled = patterns.flatMap(Compiler.compile).toIndexedSeq
     val types = BatchEvaluator.relevantTypes(compiled)
     val filtered = events.filter(col("etype").isin(types.toSeq: _*))
-    val frac = 100.0 / hotThreshold
-    // Detection counts RAW per-key events (no relevant-type filter): raw >= filtered
-    // counts always, so this can only OVER-flag (a key a bit under threshold on relevant
-    // types gets mild pane replication) — never miss a hot key. Skipping the type filter
-    // keeps the detection scan to the single key column (no role/tool reads, no CASE).
-    val hot: Array[String] =
-      if (!policyFree(patterns)) Array.empty
-      else if (frac >= 1.0)
-        events.select("key").groupBy("key").count()
-          .filter(col("count") > hotThreshold).select("key").as[String].collect()
-      else
-        events.select("key").sample(withReplacement = false, frac, seed = 7)
-          .groupBy("key").count()
-          .filter(col("count") > lit(hotThreshold * frac / 2.0)).select("key").as[String].collect()
+    val hot = if (policyFree(patterns)) hotKeys(events, hotThreshold) else Array.empty[String]
     // Mass-hot guard: auto exists for corpora where hot keys are FEW. When detection
     // flags a large set (threshold mis-set relative to the corpus, or genuinely mass-hot
     // data), the per-row hot test — an InSet over |hot| string literals, plus the plan
@@ -105,6 +96,32 @@ object Rip {
     if (hot.isEmpty) BatchEvaluator.evaluateCompiled(filtered, compiled)
     else if (hot.length > 256) evaluatePaned(filtered, patterns, compiled, paneMicros, hotKeys = None)
     else evaluatePaned(filtered, patterns, compiled, paneMicros, hotKeys = Some(hot))
+  }
+
+  /** The keys [[evaluateAuto]] salts: more than `hotThreshold` events, exactly for
+    * thresholds <= 100, else estimated from a seed-7 sample of 100/hotThreshold of the
+    * rows, cut at half the expected sample count of a just-hot key. Both collect
+    * [[countedKeys]] and count on the driver.
+    *
+    * Detection counts RAW per-key events (no relevant-type filter): raw >= filtered
+    * counts always, so this can only OVER-flag (a key a bit under threshold on relevant
+    * types gets mild pane replication) — never miss a hot key. Skipping the type filter
+    * keeps the detection scan to the single key column (no role/tool reads, no CASE). */
+  private[spark] def hotKeys(events: Dataset[Ev], hotThreshold: Long): Array[String] = {
+    val frac = 100.0 / hotThreshold
+    val cut = if (frac >= 1.0) hotThreshold.toDouble else hotThreshold * frac / 2.0
+    countedKeys(events, frac).collect()
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+      .collect { case (k, n) if n > cut => k }.toArray
+  }
+
+  /** The key of every row [[hotKeys]] counts — all of them when `frac >= 1`, else a
+    * seed-7 `frac` sample: one map-only stage (no Exchange) that sends the driver one
+    * key per counted row. */
+  private[spark] def countedKeys(events: Dataset[Ev], frac: Double): Dataset[String] = {
+    import events.sparkSession.implicits._
+    val keys = events.select("key")
+    (if (frac >= 1.0) keys else keys.sample(withReplacement = false, frac, seed = 7)).as[String]
   }
 
   /** Unconditional pane salting: every key fans out over time panes. */
@@ -139,6 +156,16 @@ object Rip {
     * array) inside the same codegen'd projection, so the cold majority pays a string
     * compare and skips the pane arithmetic entirely.
     *
+    * Codegen: a CASE WHEN picks one of the fixed `array(...)` spellings of the replica
+    * list — `[p]`, `[p, p-1]`, `[p, p+1]` or `[p, p-1, p+1]` — so the `Generate` exploding
+    * it compiles, with the scan, the filter and the projections on both sides, into ONE
+    * WholeStageCodegen stage. No higher-order function may come back here (compacting a
+    * null-padded `[p, p-1, p+1]` is one: Spark rewrites it to `filter(x -> x IS NOT
+    * NULL)`), nor any other `CodegenFallback` expression: a single one keeps the whole
+    * `Generate` out of codegen, and the map stage then interprets it row by row — about
+    * a fifth of its profile samples on the skewed benchmark corpus. `PlanSpec` pins the
+    * single stage.
+    *
     * Shared by the batch path below and [[StreamEvaluator.evaluateSalted]] — the
     * streaming salted path replicates with exactly the same Catalyst expression. */
   private[spark] def paneArray(compiled: IndexedSeq[CompiledPattern], window: Long,
@@ -150,12 +177,19 @@ object Rip {
     val p = when(col("ts") >= 0, expr(s"ts div ${paneMicros}L"))
       .otherwise(expr(s"(ts + 1) div ${paneMicros}L") - 1L)
     val offset = col("ts") - p * paneLit
-    val prevRep = when(offset <= lit(window), p - 1L)
-    val nextRep =
-      if (backPane && negETypes.nonEmpty)
-        when(col("etype").isin(negETypes.toSeq: _*) && offset >= paneLit - lit(window), p + 1L)
-      else lit(null).cast("long")
-    val salted = array_compact(array(p, prevRep, nextRep))
+    val prev = offset <= lit(window)
+    // the replica list [p, p-1 if prev, p+1 if next] as a CASE WHEN over fixed arrays; a
+    // null ts (null p) replicates nowhere
+    val none = typedLit(Seq.empty[Long])
+    val salted =
+      if (backPane && negETypes.nonEmpty) {
+        val next = col("etype").isin(negETypes.toSeq: _*) && offset >= paneLit - lit(window)
+        when(col("ts").isNull, none)
+          .when(prev && next, array(p, p - 1L, p + 1L))
+          .when(prev, array(p, p - 1L))
+          .when(next, array(p, p + 1L))
+          .otherwise(array(p))
+      } else when(col("ts").isNull, none).when(prev, array(p, p - 1L)).otherwise(array(p))
     hotKeys match {
       case None     => salted
       case Some(ks) => when(col("key").isin(ks.toSeq: _*), salted).otherwise(array(lit(ColdPane)))

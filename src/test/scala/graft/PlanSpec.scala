@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.expressions.CaseWhen
-import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SortExec, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.graftfn.CepEvaluateExec
@@ -73,19 +75,24 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     case other => other
   }
 
-  test("BatchEvaluator, Rip and HyperCube plan CepEvaluate straight over the Sort, no object round trip") {
+  /** The four batch entry points over the sf0.001 events (Rip on the hot route), as
+    * thunks so a test can plan each under its own settings. */
+  private lazy val entryPoints: Seq[(String, () => Dataset[CepMatch])] = {
     val evs = graft.io.EventsTable.load(spark, sf)
+    val day = 24L * 3600 * 1000000
     val keyHash: Ev => Long = e => e.key.hashCode.toLong & 0x7fffffffL
-    val plans: Seq[(String, Dataset[CepMatch])] = Seq(
-      "BatchEvaluator.evaluate" -> BatchEvaluator.evaluate(evs, Seq(Queries.seq3Pattern)),
-      "Rip.evaluateAuto hot" -> Rip.evaluateAuto(evs, Seq(Queries.seq3Pattern),
-        paneMicros = 24L * 3600 * 1000000, hotThreshold = 50L),
-      "Rip.evaluateSalted" -> Rip.evaluateSalted(evs, Seq(Queries.seq3Pattern),
-        paneMicros = 24L * 3600 * 1000000),
-      "HyperCube.evaluate" -> HyperCube.evaluate(evs, Seq(Queries.and2Pattern),
-        attributes = Map("error" -> Seq(keyHash), "purchase" -> Seq(keyHash)), units = 4))
-    plans.foreach { case (entry, ms) =>
-      val plan = ms.queryExecution.executedPlan
+    Seq(
+      "BatchEvaluator.evaluate" -> (() => BatchEvaluator.evaluate(evs, Seq(Queries.seq3Pattern))),
+      "Rip.evaluateAuto hot" -> (() => Rip.evaluateAuto(evs, Seq(Queries.seq3Pattern),
+        paneMicros = day, hotThreshold = 50L)),
+      "Rip.evaluateSalted" -> (() => Rip.evaluateSalted(evs, Seq(Queries.seq3Pattern), paneMicros = day)),
+      "HyperCube.evaluate" -> (() => HyperCube.evaluate(evs, Seq(Queries.and2Pattern),
+        attributes = Map("error" -> Seq(keyHash), "purchase" -> Seq(keyHash)), units = 4)))
+  }
+
+  test("BatchEvaluator, Rip and HyperCube plan CepEvaluate straight over the Sort, no object round trip") {
+    entryPoints.foreach { case (entry, ms) =>
+      val plan = ms().queryExecution.executedPlan
       val text = plan.toString
       val execs = collect(plan) { case e: CepEvaluateExec => e }
       assert(execs.size == 1, s"$entry: expected one CepEvaluate:\n$text")
@@ -103,9 +110,7 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       Pattern(SEQ(P(s"t${2 * i}", "a"), P(s"t${2 * i + 1}", "b")), CTrue, 1000000L, id = i))
     // the static plan: adaptive execution would only show its codegen stages once run,
     // and then replace the exchange of this empty result by an empty relation
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan = try BatchEvaluator.evaluate(evs, patterns).queryExecution.executedPlan
-      finally spark.conf.unset("spark.sql.adaptive.enabled")
+    val plan = staticPlan(BatchEvaluator.evaluate(evs, patterns))
     val exchange = collect(plan) { case e: ShuffleExchangeExec => e }.head
     // the map stage: exactly one codegen stage between the scan and the exchange
     assert(collect(exchange.child) { case w: WholeStageCodegenExec => w }.size == 1,
@@ -114,5 +119,41 @@ class PlanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(feeding.isInstanceOf[ProjectExec], s"no projection feeds the exchange:\n$plan")
     val caseWhens = feeding.asInstanceOf[ProjectExec].projectList.flatMap(_.collect { case c: CaseWhen => c })
     assert(caseWhens.isEmpty, s"CASE WHEN in the projection feeding the exchange:\n$plan")
+  }
+
+  /** The static plan of `ms`: adaptive execution switched off while it is planned. */
+  private def staticPlan(ms: => Dataset[CepMatch]): SparkPlan = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try ms.queryExecution.executedPlan finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
+
+  /** The operators compiled into `stage`'s code: its tree down to the InputAdapters. */
+  private def inStage(stage: WholeStageCodegenExec): Seq[SparkPlan] = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter => Nil
+      case other => other +: other.children.flatMap(walk)
+    }
+    walk(stage.child)
+  }
+
+  test("Rip's map side is one codegen stage with the pane Generate inside; no CodegenFallback below any exchange") {
+    entryPoints.filter(_._1.startsWith("Rip.")).foreach { case (entry, ms) =>
+      val plan = staticPlan(ms())
+      val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size == 1, s"$entry: expected one exchange:\n$plan")
+      val stages = collect(exchanges.head.child) { case w: WholeStageCodegenExec => w }
+      assert(stages.size == 1 && exchanges.head.child.isInstanceOf[WholeStageCodegenExec],
+        s"$entry: map side is not one WholeStageCodegen:\n$plan")
+      assert(inStage(stages.head).exists(_.isInstanceOf[GenerateExec]),
+        s"$entry: the pane Generate is not inside the map stage's code:\n$plan")
+    }
+    entryPoints.foreach { case (entry, ms) =>
+      val plan = staticPlan(ms())
+      val exchanges = collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.nonEmpty, s"$entry: no exchange:\n$plan")
+      val fallbacks = exchanges.flatMap(e => collect(e.child) { case p => p.expressions }.flatten)
+        .flatMap(_.collect { case c: CodegenFallback => c })
+      assert(fallbacks.isEmpty, s"$entry: CodegenFallback below the exchange: $fallbacks\n$plan")
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.cep.spark
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cep._
 import graft.cep.PStruct._
@@ -200,6 +200,68 @@ class SparkSpec extends AnyFunSuite {
         assert(ms.collect().isEmpty, s"$entry on ${rows.size} rows")
       }
       assert(metrics.eventsIn.value == rows.size && metrics.matchesOut.value == 0L)
+    }
+  }
+
+  /** The two-stage spelling of hot-key detection (optional sample, `groupBy.count`, cut,
+    * collect), kept as the oracle of [[Rip.hotKeys]]'s one-stage job. */
+  private def twoStageHotKeys(events: Dataset[Ev], hotThreshold: Long): Set[String] = {
+    import spark.implicits._
+    val frac = 100.0 / hotThreshold
+    val counted =
+      if (frac >= 1.0) events.select("key").groupBy("key").count().filter(col("count") > hotThreshold)
+      else events.select("key").sample(withReplacement = false, frac, seed = 7)
+        .groupBy("key").count().filter(col("count") > lit(hotThreshold * frac / 2.0))
+    counted.select("key").as[String].collect().toSet
+  }
+
+  test("one-stage hot-key detection flags the two-stage oracle's keys, with no Exchange") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val hotCount = evs.filter(_.key == "conv-00000").count()
+    // 0, 40 and 100 count every row; the rest sample: 150, 300 and the hot conversation's
+    // own count flag it, 10000 flags nothing
+    val thresholds = Seq(0L, 40L, 100L, 150L, 300L, hotCount, 1000L, 10000L)
+    val sets = thresholds.map { t =>
+      val got = Rip.hotKeys(evs, t).toSet
+      assert(got == twoStageHotKeys(evs, t), s"threshold $t")
+      t -> got
+    }.toMap
+    assert(sets(0L) == evs.select("key").distinct().collect().map(_.getString(0)).toSet && sets(40L).size > 1, s"hot sets $sets")
+    assert(Seq(150L, 300L, hotCount).forall(t => sets(t).contains("conv-00000")) &&
+      sets(300L) == Set("conv-00000") && sets(10000L).isEmpty, s"hot sets $sets")
+    val helper = new AdaptiveSparkPlanHelper {}
+    Seq(1.0, 100.0 / 300).foreach { frac =>
+      val job = Rip.countedKeys(evs, frac)
+      job.collect()
+      val exchanges = helper.collect(job.queryExecution.executedPlan) { case e: Exchange => e }
+      assert(exchanges.isEmpty, s"detection (frac $frac) shuffles:\n${job.queryExecution.executedPlan}")
+    }
+  }
+
+  test("single-key and all-null-payload inputs: every Rip route equals BatchEvaluator") {
+    import spark.implicits._
+    val andNot = Pattern(AND(P("USER", "a"), NOT(P("TOOL", "b")), P("ASSISTANT", "c")),
+      CTrue, windowMicros = 5 * MIN, id = 3)
+    val patterns = Seq(flagship.copy(id = 0), negPattern.copy(id = 1), kcPattern.copy(id = 2), andNot)
+    val rows = evs.collect().toSeq
+    val inputs = Seq(
+      "single key" -> rows.sortBy(e => (e.ts, e.key, e.idx)).zipWithIndex
+        .map { case (e, i) => e.copy(key = "solo", idx = i.toLong) },
+      "all-null s1/s2" -> rows.map(_.copy(s1 = null, s2 = null)))
+    inputs.foreach { case (name, input) =>
+      val ds = spark.createDataset(input)
+      val plain = canon(BatchEvaluator.evaluate(ds, patterns).collect().toSeq)
+      assert(plain.nonEmpty, name)
+      val routes = Seq(
+        // 0: exact detection flags every key; 200: sampled detection flags the hot ones
+        "Rip.evaluateAuto hot (exact)" -> Rip.evaluateAuto(ds, patterns, 10 * MIN, hotThreshold = 0L),
+        "Rip.evaluateAuto hot (sampled)" -> Rip.evaluateAuto(ds, patterns, 10 * MIN, hotThreshold = 200L),
+        "Rip.evaluateAuto cold" -> Rip.evaluateAuto(ds, patterns, 10 * MIN, hotThreshold = Long.MaxValue),
+        "Rip.evaluateSalted" -> Rip.evaluateSalted(ds, patterns, 10 * MIN))
+      routes.foreach { case (route, ms) =>
+        assert(canon(ms.collect().toSeq) == plain, s"$route on the $name input")
+      }
     }
   }
 
